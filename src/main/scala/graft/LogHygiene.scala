@@ -14,8 +14,9 @@ package graft
   * would pin that logger's LEVEL and silently widen or narrow what
   * the main's setLogLevel choice lets through (a review finding: the
   * first version suppressed all DAGScheduler WARNs under Verify's
-  * WARN root). Library code never installs this — only the Bench and
-  * Verify mains, whose stdout/stderr become committed artifacts. */
+  * WARN root). Library code never installs this — only
+  * [[GraftSession]], the mains' factory, whose stdout/stderr become
+  * committed artifacts. */
 object LogHygiene {
   def suppressKnownBenign(): Unit = {
     import org.apache.logging.log4j.LogManager

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc SQL over the lake (SURVEY.md §3 EP3 — the reference's
   * `duckdb` CLI / `dbt show` entry point):
   *
@@ -14,16 +12,7 @@ object Sql {
     require(args.length >= 2, "usage: graft.Sql <sfDir> <sql...>")
     val sfDir = args(0)
     val sql = args.drop(1).mkString(" ")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     Tables.registerAll(spark, sfDir)
     spark.sql(sql).show(100, truncate = false)
     spark.stop()

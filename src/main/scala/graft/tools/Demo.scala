@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.DeltaLite
 
 /** Library-surface walkthrough of the DeltaLite lifecycle — the usage a
@@ -8,12 +7,7 @@ import graft.sources.DeltaLite
   * time-travel. `sbt "runMain graft.tools.Demo"`. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     import spark.implicits._
 
     val path = java.nio.file.Files.createTempDirectory("graft_demo").toString

@@ -1,8 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import graft.functions.{Dedup, GraftFunctions}
-import org.apache.spark.sql.SparkSession
+import graft.functions.Dedup
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -12,13 +11,7 @@ import org.apache.spark.sql.expressions.Window
 object Diag {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
+    val spark = graft.GraftSession()
 
     val d = Tables.t(spark, sf, "documents").select(col("doc_id"), col("text"))
     val mutated = d.filter(col("doc_id") < 20)

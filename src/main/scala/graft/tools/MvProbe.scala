@@ -2,27 +2,18 @@ package graft.tools
 
 import graft.sources.DeltaLite
 import graft.operators.{IncrementalMv, Merge}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch diagnostics: mirrors the s25/s26/s33 MV-chain lifecycles
   * step-by-step and reports per-OP wall seconds and Spark job counts, so
   * the fixed per-commit costs are attributable to create / append /
-  * delete / update / refresh individually. Not part of the driver
-  * contract. */
+  * read / delete / update / refresh individually. The read after append
+  * runs twice: the second shows what a warm snapshot saves. A
+  * diagnostic, not a benchmarked or verified surface. */
 object MvProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.LogHygiene.suppressKnownBenign()
+    val spark = graft.GraftSession()
     val jobs = new java.util.concurrent.atomic.AtomicLong()
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -61,6 +52,8 @@ object MvProbe {
       time("append(src)") {
         DeltaLite.append(spark, src, o.limit(1000))
       }
+      time("read(src)+count") { DeltaLite.read(spark, src).count() }
+      time("reread(src)+count") { DeltaLite.read(spark, src).count() }
       time("delete(src)") {
         DeltaLite.delete(spark, src, col("o_totalprice") < 10000.0)
       }

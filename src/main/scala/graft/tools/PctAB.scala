@@ -77,20 +77,9 @@ object PctAB {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.max(4, cpus.toInt / 8).toString)
     val order = sys.env.getOrElse("SPARK_GRAFT_AB_ORDER", "native-first")
     val reps = sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "4").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.LogHygiene.suppressKnownBenign()
+    val spark = graft.GraftSession()
 
     val variants: Seq[(String, () => DataFrame)] = Seq(
       "a12_native" -> (() => a12Native(spark, sfDir)),

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Solo profiler (optimization rounds): runs declared queries ONE AT A
   * TIME and reports, per query, the eager lifecycle seconds (the fn call
   * itself — multi-commit demos do their work there) and the action
@@ -13,35 +11,24 @@ import org.apache.spark.sql.SparkSession
   *
   * Env:
   *   SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
-  *   SPARK_GRAFT_CPUS     local[N] (default all cores)
-  *   SPARK_GRAFT_SOLO     comma-separated query names (default: all)
+  *   SPARK_GRAFT_CPUS     local[N] (default all cores; see GraftSession)
+  *   SPARK_GRAFT_SOLO     comma-separated query names (default: all);
+  *                        a `set:key=value` entry flips a session conf
+  *                        for the entries after it (conf A/Bs, e.g.
+  *                        `set:spark.sql.adaptive.enabled=false`)
   *   SPARK_GRAFT_PLANDIR  if set, writes <dir>/<query>.txt formatted plans
   *   SPARK_GRAFT_SOLO_OUT if set, writes a JSON map of the timings there
   */
 object Solo {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.max(4, cpus.toInt / 8).toString)
     val names: Seq[String] = sys.env.get("SPARK_GRAFT_SOLO") match {
       case Some(s) => s.split(",").toSeq
       case None => SparkEntry.queries.keys.toSeq.sorted
     }
     val planDir = sys.env.get("SPARK_GRAFT_PLANDIR")
     planDir.foreach(d => new java.io.File(d).mkdirs())
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    LogHygiene.suppressKnownBenign()
+    val spark = GraftSession()
     // warmup like Bench: JIT, codegen cache, shuffle machinery, listings
     SparkEntry.queries("a1_groupby_aggs")(spark, sfDir).count()
     SparkEntry.queries("t6_dedup_events")(spark, sfDir).count()

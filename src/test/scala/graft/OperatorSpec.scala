@@ -247,64 +247,53 @@ class OperatorSpec extends AnyFunSuite with TestSpark {
       s"expected the non-null-bin contract error, got: $ex")
   }
 
-  test("Bench seed loader: full-coverage seeds load, headline-subset overwrites are rejected, garbage is empty") {
-    val declared = (1 to 100).map(i => s"q$i").toSet
-    def artifact(names: Seq[String], withEma: Boolean): String = {
-      val qs = names.map(n => s""""$n":1.5""").mkString("{", ",", "}")
-      val ema = if (withEma) s""","ema":$qs""" else ""
-      s"""{"metric":"total","value":9.9,"unit":"sec","queries":$qs$ema,"jobs":$qs,"sf":"x"}"""
-    }
-    // a real artifact covering the suite seeds the schedule
-    val (sec, jobs) = Bench.loadSeed(
-      artifact(declared.toSeq, withEma = true), declared)
-    assert(sec.size === 100 && jobs.size === 100)
-    // the driver's headline-subset overwrite (24 of 100 queries, no
-    // ema) must be REJECTED — seeding from it scrambles the next run
-    val (sec2, jobs2) = Bench.loadSeed(
-      artifact(declared.toSeq.take(24), withEma = false), declared)
-    assert(sec2.isEmpty && jobs2.isEmpty,
-      "a sub-coverage seed must fall back to the static schedule")
-    // pre-ema artifacts (full queries map, no ema field) still load
-    val (sec3, _) = Bench.loadSeed(
-      artifact(declared.toSeq, withEma = false), declared)
-    assert(sec3.size === 100)
-    // unparseable content propagates as an exception (main catches it)
-    intercept[Exception] { Bench.loadSeed("not json {", declared) }
-    // the r17 contamination case: a FULL-coverage pre-EMA artifact
-    // written by a loaded run (host_speed 3.616) passes the subset
-    // guard — raw seconds must come back normalized by host_speed so
-    // absolute pool thresholds keep meaning reference-speed seconds
-    val qs = declared.toSeq.map(n => s""""$n":3.616""").mkString("{", ",", "}")
-    val loaded =
-      s"""{"metric":"total","value":9.9,"unit":"sec","queries":$qs,"host_speed":3.616,"sf":"x"}"""
-    val (sec4, _) = Bench.loadSeed(loaded, declared)
-    assert(sec4.size === 100)
-    assert(math.abs(sec4("q1") - 1.0) < 1e-9,
-      s"raw seconds must be host_speed-normalized, got ${sec4("q1")}")
-    // EMA absorption refuses loaded samples: an existing prior survives
-    // a speed>1.5 run untouched; a new query still takes its first
-    // (normalized) sample; calm runs fold 0.5/0.5 as before
-    assert(Bench.foldEma(Some(2.0), 7.0, 3.6) === 2.0)
-    assert(Bench.foldEma(None, 7.0, 3.6) === 7.0)
-    assert(Bench.foldEma(Some(2.0), 3.0, 1.0) === 2.5)
-    // the r18 contamination case: a seed recorded at a DIFFERENT core
-    // count (the driver's 8-core scaling run overwrites the artifact) is
-    // a different experiment — completion times are functions of the
-    // submission-pool width. Reject it; same-cpus seeds still load, and
-    // artifacts predating ema_cpus fall back to their cpus field.
-    def cpusArtifact(ec: String): String = {
-      val qs = declared.toSeq.map(n => s""""$n":1.5""").mkString("{", ",", "}")
-      s"""{"metric":"total","value":9.9,"unit":"sec","queries":$qs,"ema":$qs$ec,"sf":"x"}"""
-    }
-    val (sec5, _) = Bench.loadSeed(cpusArtifact(""","ema_cpus":8"""), declared, 32)
-    assert(sec5.isEmpty, "an off-cpus seed must fall back to the static schedule")
-    val (sec6, _) = Bench.loadSeed(cpusArtifact(""","ema_cpus":32"""), declared, 32)
-    assert(sec6.size === 100)
-    val (sec7, _) = Bench.loadSeed(cpusArtifact(""","cpus":8"""), declared, 32)
-    assert(sec7.isEmpty, "pre-ema_cpus artifacts must honor their cpus field")
-    // cpus=0 (callers that don't know the core count) keeps legacy behavior
-    val (sec8, _) = Bench.loadSeed(cpusArtifact(""","cpus":8"""), declared)
-    assert(sec8.size === 100)
+  test("Bench order: every declared query once, longest profiled first, unprofiled last by name; pools from the profile; host_speed needs 20 samples") {
+    val declared = Seq("q3", "q1", "q5", "q2", "q4")
+    val profile = Bench.loadProfile(
+      """{"q2":{"lifecycle":0.5,"action":0.25},"q4":{"lifecycle":2.0,"action":1.0},""" +
+        """"gone":{"lifecycle":9.0,"action":9.0},"q5":{"lifecycle":0.1,"action":-1.0}}""")
+    // a query that failed under Solo (action -1) is unprofiled
+    assert(profile === Map("q2" -> 0.75, "q4" -> 3.0, "gone" -> 18.0))
+    val o = Bench.order(declared, profile)
+    assert(o === Seq("q4", "q2", "q1", "q3", "q5"))
+    assert(o.sorted === declared.sorted)
+    // no profile at all: name order
+    assert(Bench.order(declared, Map.empty) === declared.sorted)
+    // pool membership reads the profile alone: >= 3 s solo is long
+    assert(declared.map(Bench.schedulerPool(_, profile)) ===
+      Seq("graft-adhoc", "graft-adhoc", "graft-adhoc", "graft-adhoc", "graft-long"))
+
+    val prof = (1 to 30).map(i => s"p$i" -> 1.0).toMap
+    def run(n: Int) = (1 to n).map(i => (s"p$i", 2.0 + i / 100.0, true))
+    assert(Bench.hostSpeed(run(19), prof) === (1.0, 19))
+    val (speed, samples) = Bench.hostSpeed(run(21), prof)
+    assert(samples === 21 && math.abs(speed - 2.11) < 1e-9)
+    // failed and sub-0.3 s queries are not samples
+    assert(Bench.hostSpeed(run(21).map { case (k, _, _) => (k, 5.0, false) } ++
+      run(21).map { case (k, _, ok) => (k, 0.2, ok) }, prof) === (1.0, 0))
+  }
+
+  test("Bench printed line: exact JSON keys, declared headline queries, under the 2000-char stdout tail") {
+    import org.json4s._
+    val declared = SparkEntry.queries.keySet
+    val undeclared = Bench.headline.filterNot(declared)
+    assert(undeclared.isEmpty, s"headline names no declared query: $undeclared")
+    // widest values each field can plausibly take
+    val run = Bench.Run(99999.999,
+      declared.toSeq.sorted.map(n => (n, 9999.999, true)),
+      declared.map(_ -> 99999L).toMap, "d" * 64, 1024, (999.999, 364),
+      "999.99,999.99,999.99", "999.99,999.99,999.99")
+    val line = Bench.printedLine(run)
+    assert(line.length < 2000, s"printed line is ${line.length} chars")
+    val j = org.json4s.jackson.JsonMethods.parse(line)
+    def keys(v: JValue): Seq[String] = v.asInstanceOf[JObject].obj.map(_._1)
+    assert(keys(j).toSet === Set("metric", "value", "unit",
+      "queries", "sf", "host_speed", "host_speed_samples", "loadavg_start",
+      "loadavg_end", "cpus"))
+    assert(keys(j \ "queries") === Bench.headline)
+    // the file artifact keeps every query and its job count
+    val f = org.json4s.jackson.JsonMethods.parse(Bench.fileLine(run))
+    assert(keys(f \ "jobs").toSet === declared)
   }
 
   test("GroupedPercentile matches native percentile/percentile_disc bit-for-bit") {
